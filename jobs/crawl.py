@@ -45,15 +45,13 @@ def main() -> None:
                     help="skip non-essential per-epoch stat counts")
     ap.add_argument("--no-validate", action="store_true",
                     help="skip decode/phash checks (bench the frontier only)")
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument("--seen-filter", default="bloom",
-                    choices=["bloom", "cuckoo"],
-                    help="approximate seen-set backend (cuckoo = "
-                         "deletion-capable, operators/cuckoo.py)")
+                    choices=["bloom", "cuckoo", "none"],
+                    help="approximate seen-set prefilter (cuckoo = "
+                         "deletion-capable, operators/cuckoo.py; none = "
+                         "exact anti-join only)")
     ap.add_argument("--no-carryover", action="store_true",
                     help="disable token-bucket carry-over (fixed per-epoch budgets)")
-    ap.add_argument("--no-images", action="store_true",
-                    help="world without binary payloads (frontier-only bench)")
     ap.add_argument("--fetch-join", default="auto",
                     choices=["auto", "broadcast", "bucketed"],
                     help="bucketed = ingest linkgraph/images as bucketed "
@@ -77,8 +75,7 @@ def main() -> None:
         datagen.write_world(
             spark, world, args.n_urls, args.hosts,
             fanout=args.fanout, n_seeds=args.seeds,
-            partitions=args.partitions, with_images=not args.no_images,
-            budget_scale=args.budget_scale,
+            partitions=args.partitions, budget_scale=args.budget_scale,
         )
         print(f"world generated in {time.perf_counter() - t0:.1f}s", file=sys.stderr)
 
@@ -99,8 +96,7 @@ def main() -> None:
         world_dir=world,
         max_epochs=args.max_epochs,
         frontier_partitions=args.partitions,
-        validate=not (args.no_validate or args.no_images),
-        use_bloom=not args.no_bloom,
+        validate=not args.no_validate,
         seen_filter=args.seen_filter,
         token_carryover=not args.no_carryover,
         collect_stats=not args.lean,

@@ -1,17 +1,34 @@
 """Bloom filter invariants: no false negatives, bounded FPR, merge,
-sharded ≡ monolith membership."""
+sizing; plus the shared sharded-filter contract (tests/sharded_contract.py)
+run against ``ShardedBloom``, where every equivalence is bit for bit."""
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
-from whakoom_webscrapper_spark.operators.bloom import (
-    Bloom,
-    ShardedBloom,
-    add_keys_distributed,
-    add_keys_local,
-    build_bloom,
+from tests.sharded_contract import (  # noqa: F401 (collected here)
+    Backend,
+    test_distributed_build_matches_local,
+    test_incremental_distributed_fold_matches_rebuild,
+    test_prefilter_split_is_exact_partition,
+    test_sharded_membership_equals_monolith,
+    test_sharded_negative_keys_route_consistently,
 )
+from whakoom_webscrapper_spark.operators import bloom
+from whakoom_webscrapper_spark.operators.bloom import Bloom, ShardedBloom, build_bloom
+
+
+@pytest.fixture(scope="module")
+def backend():
+    return Backend(
+        ops=bloom,
+        sharded=ShardedBloom,
+        build=build_bloom,
+        max_fpr=0.03,
+        fpr_gap=0.01,
+        state=lambda shard: shard.words.tobytes(),
+    )
 
 
 def test_no_false_negatives():
@@ -48,72 +65,9 @@ def test_roundtrip_bytes():
     assert c.may_contain_many(np.array([7, -9, 123456789], dtype=np.int64)).all()
 
 
-def test_sharded_membership_equals_monolith():
-    """Sharding changes WHERE bits live, not membership semantics: every
-    added key is contained (zero false negatives, same as monolith) and
-    the FPR at equal total bits stays in the same band."""
-    rng = np.random.default_rng(3)
-    keys = rng.integers(-(2**62), 2**62, 20_000, dtype=np.int64)
-    probe = rng.integers(-(2**62), 2**62, 50_000, dtype=np.int64)
-    mono = Bloom.sized_for(20_000, 0.01)
-    shard = ShardedBloom.sized_for(20_000, 0.01, n_shards=16)
-    mono.add_many(keys)
-    shard.add_many(keys)
-    assert mono.may_contain_many(keys).all()
-    assert shard.may_contain_many(keys).all()
-    fpr_m = mono.may_contain_many(probe).mean()
-    fpr_s = shard.may_contain_many(probe).mean()
-    assert fpr_s < 0.03 and abs(fpr_s - fpr_m) < 0.01
-
-
 def test_sharded_sizing():
     sb = ShardedBloom.sized_for(1_000_000, 0.01, n_shards=16)
     assert sb.n_shards == 16
     total_bits = sum(s.m_bits for s in sb.shards)
     expect = Bloom.sized_for(1_000_000, 0.01).m_bits
     assert abs(total_bits - expect) / expect < 0.02  # per-shard 64-bit rounding
-
-
-def test_sharded_negative_keys_route_consistently():
-    sb = ShardedBloom.sized_for(1000, 0.01, n_shards=8)
-    keys = np.array([-1, -8, -9, 7, 8, 0], dtype=np.int64)
-    s = sb.shard_of(keys)
-    assert (s >= 0).all() and (s < 8).all()
-    sb.add_many(keys)
-    assert sb.may_contain_many(keys).all()
-
-
-def test_distributed_build_matches_local(spark):
-    df = spark.range(0, 5000, 1, 8).selectExpr("xxhash64(id) as url_hash")
-    template = ShardedBloom.sized_for(5000, 0.01, n_shards=8)
-    bloom = build_bloom(df, "url_hash", template)
-    keys = np.array([r[0] for r in df.collect()], dtype=np.int64)
-    assert bloom.may_contain_many(keys).all()
-    # distributed build ≡ local fold on the same keys, bit for bit
-    local = ShardedBloom.sized_for(5000, 0.01, n_shards=8)
-    local.add_many(keys)
-    for b_dist, b_loc in zip(bloom.shards, local.shards):
-        assert np.array_equal(b_dist.words, b_loc.words)
-
-
-def test_incremental_distributed_fold_matches_rebuild(spark):
-    """The crawl's per-epoch fold (add_keys_distributed on each epoch's
-    slice) must equal a from-scratch rebuild over the union AND the
-    driver-side local fold, bit for bit — same sizing → same positions."""
-    e0 = spark.range(0, 3000, 1, 8).selectExpr("xxhash64(id) as url_hash")
-    e1 = spark.range(3000, 7000, 1, 8).selectExpr("xxhash64(id) as url_hash")
-    both = e0.unionByName(e1)
-
-    inc = ShardedBloom.sized_for(7000, 0.01, n_shards=8)
-    add_keys_distributed(inc, e0, "url_hash")
-    add_keys_distributed(inc, e1, "url_hash")
-
-    rebuilt = build_bloom(
-        both, "url_hash", ShardedBloom.sized_for(7000, 0.01, n_shards=8)
-    )
-    loc = ShardedBloom.sized_for(7000, 0.01, n_shards=8)
-    add_keys_local(loc, both, "url_hash")
-
-    for b_inc, b_re, b_loc in zip(inc.shards, rebuilt.shards, loc.shards):
-        assert np.array_equal(b_inc.words, b_re.words)
-        assert np.array_equal(b_inc.words, b_loc.words)

@@ -1,7 +1,8 @@
 """Cuckoo-filter invariants: no false negatives, bounded FPR, deletion,
-merge-as-union, sharded ≡ monolith membership, distributed build ≡
-local, and crawl-backend equivalence with the Bloom path (the north
-rule's "Bloom/cuckoo URL-seen set" — SURVEY.md §1)."""
+merge-as-union, distributed delete ≡ driver delete, crawl-backend
+equivalence with the Bloom path (the north rule's "Bloom/cuckoo URL-seen
+set" — SURVEY.md §1); plus the shared sharded-filter contract
+(tests/sharded_contract.py) run against ``ShardedCuckoo``."""
 
 from __future__ import annotations
 
@@ -10,13 +11,44 @@ import tempfile
 import numpy as np
 import pytest
 
+from tests.sharded_contract import (  # noqa: F401 (collected here)
+    Backend,
+    test_distributed_build_matches_local,
+    test_incremental_distributed_fold_matches_rebuild,
+    test_prefilter_split_is_exact_partition,
+    test_sharded_membership_equals_monolith,
+    test_sharded_negative_keys_route_consistently,
+)
+from whakoom_webscrapper_spark.operators import cuckoo
 from whakoom_webscrapper_spark.operators.cuckoo import (
     Cuckoo,
     ShardedCuckoo,
-    add_keys_distributed,
     build_cuckoo,
-    prefilter_maybe_seen,
 )
+
+
+def _stored(shard: Cuckoo) -> list:
+    """Sorted (fingerprint, lower of its two buckets) per stored entry:
+    equal for two tables holding the same keys, whichever of its two
+    buckets each key landed in."""
+    b, _ = np.nonzero(shard.table)
+    fps = shard.table[shard.table != 0]
+    low = np.minimum(b, b ^ shard._offset_of(fps))
+    return sorted(zip(fps.tolist(), low.tolist())) + sorted(
+        zip(shard.stash_fp, shard.stash_bucket)
+    )
+
+
+@pytest.fixture(scope="module")
+def backend():
+    return Backend(
+        ops=cuckoo,
+        sharded=ShardedCuckoo,
+        build=build_cuckoo,
+        max_fpr=0.002,
+        fpr_gap=0.002,
+        state=_stored,
+    )
 
 
 def _keys(n, seed, lo=-(2**62), hi=2**62):
@@ -103,54 +135,6 @@ def test_overload_raises():
         c.add_many(np.arange(4_000, dtype=np.int64))
 
 
-def test_sharded_membership_equals_monolith():
-    keys = np.unique(_keys(20_000, 8))
-    probe = _keys(20_000, 9)
-    mono = Cuckoo.sized_for(20_000)
-    mono.add_many(keys)
-    sharded = ShardedCuckoo.sized_for(20_000, n_shards=8)
-    sharded.add_many(keys)
-    assert sharded.may_contain_many(keys).all()
-    # shards hash disjoint key populations — FPR profile equivalent
-    assert abs(sharded.may_contain_many(probe).mean()
-               - mono.may_contain_many(probe).mean()) < 0.002
-
-
-def test_sharded_negative_keys_route_consistently():
-    keys = np.array([-1, -17, -(2**61), 5, 0], dtype=np.int64)
-    s = ShardedCuckoo.sized_for(1_000, n_shards=16)
-    s.add_many(keys)
-    assert s.may_contain_many(keys).all()
-    assert s.delete_many(keys).all()
-
-
-def test_distributed_build_matches_local(spark):
-    keys = np.unique(_keys(30_000, 10))
-    df = spark.createDataFrame(
-        [(int(k),) for k in keys], "url_hash long").repartition(8)
-    template = ShardedCuckoo.sized_for(30_000, n_shards=4)
-    dist = build_cuckoo(df, "url_hash", template)
-    local = ShardedCuckoo.sized_for(30_000, n_shards=4)
-    local.add_many(keys)
-    # merge is re-insert (slot layout may differ) — equivalence is on
-    # membership: zero false negatives both, FPR floor both
-    assert dist.may_contain_many(keys).all()
-    probe = _keys(100_000, 11)
-    probe = probe[~np.isin(probe, keys)]
-    assert dist.may_contain_many(probe).mean() < 0.002
-    assert local.may_contain_many(probe).mean() < 0.002
-
-
-def test_incremental_distributed_fold_matches_rebuild(spark):
-    k1, k2 = np.unique(_keys(10_000, 12)), np.unique(_keys(10_000, 13))
-    template = ShardedCuckoo.sized_for(40_000, n_shards=4)
-    df1 = spark.createDataFrame([(int(k),) for k in k1], "url_hash long")
-    df2 = spark.createDataFrame([(int(k),) for k in k2], "url_hash long")
-    filt = build_cuckoo(df1, "url_hash", template)
-    add_keys_distributed(filt, df2, "url_hash")
-    assert filt.may_contain_many(k1).all() and filt.may_contain_many(k2).all()
-
-
 def test_distributed_delete_matches_driver_delete(spark):
     """delete_keys_distributed ≡ delete_many on the driver: same found
     count, identical post-delete membership on kept keys, deleted keys
@@ -177,20 +161,6 @@ def test_distributed_delete_matches_driver_delete(spark):
     probe = np.concatenate([dele, keep, _keys(20_000, 16)])
     assert (a.may_contain_many(probe) == b.may_contain_many(probe)).all()
     assert a.may_contain_many(keep).all()
-
-
-def test_prefilter_split_is_exact_partition(spark):
-    keys = np.unique(_keys(5_000, 14))
-    filt = ShardedCuckoo.sized_for(5_000, n_shards=4)
-    filt.add_many(keys[:2_500])
-    df = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
-    new, maybe = prefilter_maybe_seen(df, "url_hash", filt, spark)
-    n_new, n_maybe = new.count(), maybe.count()
-    assert n_new + n_maybe == len(keys)
-    # every inserted key must land in maybe_seen (no false negatives)
-    inserted = {int(k) for k in keys[:2_500]}
-    got = {r.url_hash for r in maybe.collect()}
-    assert inserted <= got
 
 
 def test_crawl_with_cuckoo_matches_bloom_backend(spark):

@@ -165,6 +165,33 @@ def test_fresh_run_refuses_committed_state(spark, world, crawl_result):
         FP.crawl(spark, clobber)  # resume=False, overwrite=False → refuse
 
 
+def test_epoch_with_only_last_retry_failures_fetches_nothing(spark, world):
+    """An epoch whose frontier holds only pages at their last attempt
+    that fail again fetches no page: it must commit with fetched == 0,
+    every row resolved as failed, and an empty next frontier."""
+    last = FP.MAX_ATTEMPTS - 1
+    ids = [i for i in range(N_URLS) if datagen.fail_attempts_of(i) > last]
+    assert ids
+    d = tempfile.mkdtemp(prefix="state_lastretry_")
+    cfg = FP.CrawlConfig(state_dir=d, world_dir=world, frontier_partitions=8)
+    urls = spark.createDataFrame(
+        [(datagen.url_of(i, N_HOSTS),) for i in ids], "url string"
+    )
+    FP.make_frontier_rows(urls, cfg, 0, 0).withColumn(
+        "attempt", F.lit(last)
+    ).write.parquet(os.path.join(d, "frontier", "epoch=0"))
+    read = lambda t: spark.read.parquet(os.path.join(world, t))  # noqa: E731
+    stats = FP.run_epoch(
+        spark, cfg, 0, read("linkgraph"), read("images"), read("robots"), None
+    )
+    assert stats["fetched"] == 0
+    assert stats["admitted"] == stats["resolved"] == len(ids)
+    assert stats["frontier_next"] == 0
+    seen = spark.read.parquet(os.path.join(d, "seen", "epoch=0"))
+    assert {r.status for r in seen.select("status").collect()} == {"failed"}
+    shutil.rmtree(d, ignore_errors=True)
+
+
 def test_foreign_url_priority_coalesced(spark):
     cfg = FP.CrawlConfig(state_dir="/tmp/na", world_dir="/tmp/na")
     rows = FP.make_frontier_rows(

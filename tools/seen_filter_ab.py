@@ -1,9 +1,10 @@
 """A/B bench: Bloom vs cuckoo seen-set backend on the same crawl.
 
 The north rule names a "partitioned Bloom/cuckoo URL-seen set"; both
-backends exist behind `CrawlConfig.seen_filter` with the same sharded
-broadcast/prefilter/distributed-fold architecture (operators/bloom.py,
-operators/cuckoo.py). Crawl OUTPUT is identical either way — neither
+backends exist behind `CrawlConfig.seen_filter` and share one sharded
+broadcast/prefilter/distributed-fold layer (operators/bloom.py); only
+the per-shard structure differs (the Bloom bit array vs the cuckoo
+table of operators/cuckoo.py). Crawl OUTPUT is identical either way — neither
 filter has false negatives and maybe-seen rows are confirmed by exact
 anti-join — so this measures pure engine cost: the cuckoo's ~80x
 tighter FPR sends fewer rows through the confirm anti-join, while its
@@ -15,6 +16,8 @@ than Bloom's pure bit-ors.
 Interleaved bloom/cuckoo x reps on one pre-generated world, fresh
 state per run; writes BENCH/seen_filter_ab.json with per-run numbers
 and per-mode medians, and asserts fetched-row determinism across modes.
+The no-prefilter control is a plain crawl with `--seen-filter none`
+(`jobs/crawl.py`; every candidate then faces the exact anti-join).
 """
 
 from __future__ import annotations

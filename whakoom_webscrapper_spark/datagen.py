@@ -345,17 +345,15 @@ def write_world(
     fanout: int = 8,
     n_seeds: int = 8,
     partitions: int = 32,
-    with_images: bool = True,
     budget_scale: int = 1,
 ) -> None:
     """Materialize the synthetic world as parquet under ``out_dir``."""
     gen_linkgraph(spark, n_urls, n_hosts, fanout, partitions).write.mode(
         "overwrite"
     ).parquet(f"{out_dir}/linkgraph")
-    if with_images:
-        gen_images(spark, n_urls, partitions).write.mode("overwrite").parquet(
-            f"{out_dir}/images"
-        )
+    gen_images(spark, n_urls, partitions).write.mode("overwrite").parquet(
+        f"{out_dir}/images"
+    )
     gen_seeds(spark, n_seeds, n_urls, n_hosts).write.mode("overwrite").parquet(
         f"{out_dir}/seeds"
     )

@@ -16,6 +16,11 @@ anywhere in the lifecycle. At 1% FPR the bitmap is the only structure
 that must scale with |seen|; everything else is per-epoch. In the
 sandbox each shard is KBs–MBs.
 
+The sharded layer (``ShardedFilter``: routing, distributed build and
+fold, per-shard broadcast prefilter) is written once here and shared by
+both seen-set backends; ``operators/cuckoo.py`` supplies only its
+per-shard structure and deletion.
+
 Hashing: double hashing over the already-computed ``url_hash`` int64 —
 h_i(x) = h1(x) + i*h2(x) mod m, with h1 = splitmix64(x) and h2 = odd
 mix of h1. h1 MUST be a real mix, not identity: the sharded filter
@@ -87,6 +92,10 @@ class Bloom:
         self.words |= other.words
         return self
 
+    @property
+    def sizing(self) -> tuple[int, int]:
+        return self.m_bits, self.k
+
     def to_bytes(self) -> bytes:
         return self.words.tobytes()
 
@@ -102,16 +111,25 @@ class Bloom:
         return cls(m, k)
 
 
-class ShardedBloom:
-    """B sub-filters keyed ``pmod(url_hash, B)`` — the 10^10-key design
-    (docs/SCALE.md): no single monolithic bitmap ever exists. Each shard
-    is an independent Bloom over the keys whose ``key mod B`` selects it;
-    a key's membership is decided entirely by its home shard.
+def _by_shard(keys: np.ndarray, n_shards: int):
+    """Yield ``(shard, mask)`` for every shard the int64 ``keys`` touch.
+    Vectorized ``pmod(key, B)``: numpy's % on int64 is floor-mod
+    (non-negative for positive B), matching Spark's pmod exactly."""
+    s = keys % np.int64(n_shards)
+    for b in np.unique(s):
+        yield int(b), s == b
 
-    Why sharding (vs one bitmap):
-    - at 10^10 keys / 1% FPR the bitmap is ~12 GB — over Spark's single-
-      broadcast ceiling and a driver-memory hazard. B=256 shards are
-      ~47 MB each: individually broadcastable (torrent-style, driver
+
+class ShardedFilter:
+    """B sub-filters keyed ``pmod(url_hash, B)`` — the 10^10-key design
+    (docs/SCALE.md): no single monolithic filter ever exists. Each shard
+    is an independent ``shard_cls`` over the keys whose ``key mod B``
+    selects it; a key's membership is decided entirely by its home shard.
+
+    Why sharding (vs one filter):
+    - at 10^10 keys / 1% FPR a Bloom bitmap is ~12 GB — over Spark's
+      single-broadcast ceiling and a driver-memory hazard. B=256 shards
+      are ~47 MB each: individually broadcastable (torrent-style, driver
       egress bounded) and individually fold-able.
     - the per-epoch incremental fold touches only the shards that got new
       keys, and each shard can be (re)broadcast independently.
@@ -121,73 +139,86 @@ class ShardedBloom:
       executor). In the sandbox the frontier is small enough that
       broadcasting all shards is faster, so that variant stays documented
       rather than default.
+
+    Shard contract (``Bloom``, ``cuckoo.Cuckoo``): ``sized_for(n, fpr)``,
+    ``add_many``, ``may_contain_many``, ``merge``, a ``sizing`` tuple with
+    ``cls(*sizing)`` an empty shard, ``to_bytes()`` and
+    ``cls.from_bytes(data, *sizing)``.
     """
 
-    def __init__(self, n_shards: int, shards: list[Bloom]):
+    shard_cls: type
+
+    def __init__(self, n_shards: int, shards: list):
         assert len(shards) == n_shards
         self.n_shards = n_shards
         self.shards = shards
 
     @classmethod
-    def sized_for(
-        cls, n_keys: int, fpr: float = 0.01, n_shards: int = 16
-    ) -> "ShardedBloom":
+    def sized_for(cls, n_keys: int, fpr: float = 0.01, n_shards: int = 16):
         per = max(n_keys // n_shards, 64)
-        return cls(n_shards, [Bloom.sized_for(per, fpr) for _ in range(n_shards)])
+        return cls(
+            n_shards, [cls.shard_cls.sized_for(per, fpr) for _ in range(n_shards)]
+        )
 
     def shard_of(self, keys: np.ndarray) -> np.ndarray:
-        """Vectorized ``pmod(key, B)`` — numpy's % on int64 is floor-mod
-        (non-negative for positive B), matching Spark's pmod exactly."""
         return keys.astype(np.int64) % np.int64(self.n_shards)
 
     def add_many(self, keys: np.ndarray) -> None:
-        if len(keys) == 0:
-            return
         keys = keys.astype(np.int64)
-        s = self.shard_of(keys)
-        for b in np.unique(s):
-            self.shards[int(b)].add_many(keys[s == b])
+        for b, mask in _by_shard(keys, self.n_shards):
+            self.shards[b].add_many(keys[mask])
 
-    def may_contain_many(self, keys: np.ndarray) -> np.ndarray:
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
+    def _gather(self, keys: np.ndarray, op) -> np.ndarray:
+        """``op(shard, shard_keys)`` on each key's home shard; the boolean
+        answers come back in key order."""
         keys = keys.astype(np.int64)
-        s = self.shard_of(keys)
         out = np.zeros(len(keys), dtype=bool)
-        for b in np.unique(s):
-            mask = s == b
-            out[mask] = self.shards[int(b)].may_contain_many(keys[mask])
+        for b, mask in _by_shard(keys, self.n_shards):
+            out[mask] = op(self.shards[b], keys[mask])
         return out
 
-    def merge(self, other: "ShardedBloom") -> "ShardedBloom":
+    def may_contain_many(self, keys: np.ndarray) -> np.ndarray:
+        return self._gather(keys, lambda shard, k: shard.may_contain_many(k))
+
+    def merge(self, other: "ShardedFilter") -> "ShardedFilter":
         assert self.n_shards == other.n_shards
         for mine, theirs in zip(self.shards, other.shards):
             mine.merge(theirs)
         return self
 
 
-_BLOOM_ROW_SCHEMA = T.StructType(
+class ShardedBloom(ShardedFilter):
+    """Sharded Bloom: the default crawl seen-set prefilter."""
+
+    shard_cls = Bloom
+
+
+_SHARD_ROW_SCHEMA = T.StructType(
     [
         T.StructField("shard", T.IntegerType(), False),
-        T.StructField("partition_bits", T.BinaryType(), False),
+        T.StructField("data", T.BinaryType(), False),
         T.StructField("n_keys", T.LongType(), False),
     ]
 )
 
 
-def _shard_bitmap_rows(df: DataFrame, key_col: str, template: ShardedBloom) -> list:
-    """Distributed map phase shared by ``build_bloom`` and
-    ``add_keys_distributed``: each partition builds sub-bitmaps PER SHARD
+def _shard_rows(df: DataFrame, key_col: str, template: ShardedFilter) -> list:
+    """Distributed map phase shared by ``build`` and
+    ``add_keys_distributed``: each partition builds sub-filters PER SHARD
     with mapInPandas (one row per (partition, shard) actually touched) and
-    ships only those bitmaps to the driver. Transfer is Σ touched-shard
-    bitmaps — at the design point each shard row is m/B bits, so no single
-    transfer object exceeds the shard size, and (unlike a raw-key
-    collect) the total is bounded by the filter size, not by |keys|."""
+    ships only those to the driver. Transfer is Σ touched-shard filters —
+    at the design point each shard row is 1/B of the filter, so no single
+    transfer object exceeds the shard size, and (unlike a raw-key collect)
+    the total is bounded by the filter size, not by |keys|.
+
+    The closure captures classes and sizing tuples only — never a filter,
+    which would ship the whole structure inside every task."""
+    sharded_cls, shard_cls = type(template), template.shard_cls
     n_shards = template.n_shards
-    sizing = [(s.m_bits, s.k) for s in template.shards]
+    sizing = [s.sizing for s in template.shards]
 
     def per_partition(iterator):
-        local = ShardedBloom(n_shards, [Bloom(m, k) for m, k in sizing])
+        local = sharded_cls(n_shards, [shard_cls(*z) for z in sizing])
         counts = np.zeros(n_shards, dtype=np.int64)
         touched = False
         for pdf in iterator:
@@ -201,7 +232,7 @@ def _shard_bitmap_rows(df: DataFrame, key_col: str, template: ShardedBloom) -> l
                 [
                     {
                         "shard": b,
-                        "partition_bits": local.shards[b].to_bytes(),
+                        "data": local.shards[b].to_bytes(),
                         "n_keys": int(counts[b]),
                     }
                     for b in range(n_shards)
@@ -209,80 +240,67 @@ def _shard_bitmap_rows(df: DataFrame, key_col: str, template: ShardedBloom) -> l
                 ]
             )
 
-    return df.select(key_col).mapInPandas(per_partition, _BLOOM_ROW_SCHEMA).collect()
+    return df.select(key_col).mapInPandas(per_partition, _SHARD_ROW_SCHEMA).collect()
 
 
-def build_bloom(
-    df: DataFrame, key_col: str, template: ShardedBloom
-) -> ShardedBloom:
-    """Distributed (re)build from scratch (used on resume): map-side
-    per-shard bitmaps, driver OR-merge per shard."""
-    sizing = [(s.m_bits, s.k) for s in template.shards]
-    merged = ShardedBloom(
-        template.n_shards, [Bloom(m, k) for m, k in sizing]
-    )
-    return _merge_shard_rows(merged, _shard_bitmap_rows(df, key_col, template))
-
-
-def _merge_shard_rows(bloom: ShardedBloom, rows: list) -> ShardedBloom:
-    sizing = [(s.m_bits, s.k) for s in bloom.shards]
+def _merge_shard_rows(filt: ShardedFilter, rows: list) -> ShardedFilter:
     for row in rows:
-        b = row["shard"]
-        m, k = sizing[b]
-        bloom.shards[b].merge(Bloom.from_bytes(row["partition_bits"], m, k))
-    return bloom
+        shard = filt.shards[row["shard"]]
+        shard.merge(filt.shard_cls.from_bytes(row["data"], *shard.sizing))
+    return filt
+
+
+def build(df: DataFrame, key_col: str, template: ShardedFilter) -> ShardedFilter:
+    """Distributed (re)build from scratch (used on resume): map-side
+    per-shard filters, driver merge per shard. Returns a new filter of
+    ``template``'s class and sizing; ``template`` itself is not touched."""
+    empty = type(template)(
+        template.n_shards, [template.shard_cls(*s.sizing) for s in template.shards]
+    )
+    return _merge_shard_rows(empty, _shard_rows(df, key_col, template))
+
+
+build_bloom = build
 
 
 def add_keys_distributed(
-    bloom: ShardedBloom, df: DataFrame, key_col: str
-) -> ShardedBloom:
+    filt: ShardedFilter, df: DataFrame, key_col: str
+) -> ShardedFilter:
     """Incremental epoch fold, distributed: executors hash the epoch's
-    resolved keys into per-shard bitmaps; the driver OR-merges only the
-    touched shards into the live filter. Bit-exact identical to hashing
-    the same keys driver-side (same sizing → same positions), but the
-    driver transfer is bounded by the FILTER size instead of O(|keys|) —
-    at the 10^10-URL design point an epoch can resolve ~10^8 keys
-    (~1 GB as raw int64s through the driver, every epoch); shard bitmaps
-    cap that at Σ touched-shard bytes regardless of key count."""
-    return _merge_shard_rows(bloom, _shard_bitmap_rows(df, key_col, bloom))
-
-
-def add_keys_local(bloom: ShardedBloom, df: DataFrame, key_col: str) -> ShardedBloom:
-    """Incremental fold, driver-side (small-input fast path for ad-hoc /
-    test use): one Arrow toPandas of the raw keys, vectorized add. Crawl
-    epochs use ``add_keys_distributed`` — this variant's O(|keys|) driver
-    transfer does not survive the 10^10 design point."""
-    pdf = df.select(key_col).toPandas()
-    bloom.add_many(pdf[key_col].values.astype(np.int64))
-    return bloom
+    resolved keys into per-shard filters; the driver merges only the
+    touched shards into the live filter. Membership-identical to adding
+    the same keys driver-side (for Bloom bit-exact: same sizing → same
+    positions), but the driver transfer is bounded by the FILTER size
+    instead of O(|keys|) — at the 10^10-URL design point an epoch can
+    resolve ~10^8 keys (~1 GB as raw int64s through the driver, every
+    epoch); shard filters cap that at Σ touched-shard bytes regardless
+    of key count."""
+    return _merge_shard_rows(filt, _shard_rows(df, key_col, filt))
 
 
 def prefilter_maybe_seen(
-    df: DataFrame, key_col: str, bloom: ShardedBloom, spark
+    df: DataFrame, key_col: str, filt: ShardedFilter, spark
 ) -> tuple[DataFrame, DataFrame]:
     """Split df into (definitely_new, maybe_seen) using per-shard
-    broadcast Blooms. ``definitely_new`` rows skip the exact seen
+    broadcast filters. ``definitely_new`` rows skip the exact seen
     anti-join entirely — at scale that is the whole point (the
     anti-join's shuffle only carries the ~FPR fraction + true dups).
 
     Each shard is its own broadcast object: no single broadcast exceeds
     the shard size, and Spark's torrent broadcast distributes the chunks
-    peer-to-peer. The UDF rebuilds shard views lazily (zero-copy
-    frombuffer) and routes each key to its home shard, vectorized."""
+    peer-to-peer. The UDF rebuilds shard views lazily from the broadcast
+    bytes and routes each key to its home shard, vectorized."""
     sc = spark.sparkContext
-    sizing = [(s.m_bits, s.k) for s in bloom.shards]
-    bcs = [sc.broadcast(s.to_bytes()) for s in bloom.shards]
-    n_shards = bloom.n_shards
+    shard_cls, n_shards = filt.shard_cls, filt.n_shards
+    sizing = [s.sizing for s in filt.shards]
+    bcs = [sc.broadcast(s.to_bytes()) for s in filt.shards]
 
     @F.pandas_udf(T.BooleanType())
     def maybe_seen(keys: pd.Series) -> pd.Series:
         kv = keys.values.astype(np.int64)
-        s = kv % np.int64(n_shards)
         out = np.zeros(len(kv), dtype=bool)
-        for b in np.unique(s):
-            m, k = sizing[int(b)]
-            shard = Bloom.from_bytes(bcs[int(b)].value, m, k)
-            mask = s == b
+        for b, mask in _by_shard(kv, n_shards):
+            shard = shard_cls.from_bytes(bcs[b].value, *sizing[b])
             out[mask] = shard.may_contain_many(kv[mask])
         return pd.Series(out)
 

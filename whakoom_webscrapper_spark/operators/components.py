@@ -48,8 +48,7 @@ from pyspark.sql import types as T
 # scheduling latency once the edge set is small (measured ~4-5 s for a
 # 150k-edge closure at local[32], >90% of it stage overhead). Below this
 # bound the driver runs an exact union-find on the collected DISTINCT
-# edge list instead (≤ ~32 MB at the default), the same documented
-# small-input pattern as bloom.add_keys_local; above it the distributed
+# edge list instead (≤ ~32 MB at the default); above it the distributed
 # rounds run unchanged. Both paths emit the identical (id, min-of-
 # component) assignment — pinned by tests/test_components.py.
 LOCAL_CLOSURE_MAX_EDGES = int(

@@ -1,8 +1,10 @@
 """Partitioned cuckoo filter — the deletion-capable alternative seen-set
 backend named by the north rule ("partitioned Bloom/cuckoo URL-seen
-set", SURVEY.md §1). Same sharded architecture, distributed-build
-pattern and broadcast-prefilter API as ``operators/bloom.py`` so the
-crawl can swap backends via ``CrawlConfig.seen_filter``.
+set", SURVEY.md §1). The sharded layer — ``pmod(key, B)`` routing, the
+distributed build and fold, the per-shard broadcast prefilter — is the
+one in ``operators/bloom.py``, shared by both backends rather than
+mirrored; this module supplies the per-shard ``Cuckoo`` table and
+deletion, and the crawl picks a backend via ``CrawlConfig.seen_filter``.
 
 Reference parity: the reference crawler's seen set is Scrapy's in-memory
 request-fingerprint set (dupefilter) — unbounded exact membership on one
@@ -39,9 +41,20 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
-from whakoom_webscrapper_spark.operators.bloom import _splitmix64
+from whakoom_webscrapper_spark.operators.bloom import (
+    ShardedFilter,
+    _by_shard,
+    _splitmix64,
+    build,
+)
+# the shared distributed fold and prefilter, re-exported for callers
+# that import the cuckoo backend as one module
+from whakoom_webscrapper_spark.operators.bloom import (  # noqa: F401
+    add_keys_distributed,
+    prefilter_maybe_seen,
+)
 
 SLOTS = 4
 MAX_KICKS = 500
@@ -185,6 +198,10 @@ class Cuckoo:
             self._insert_one(f, sb)
         return self
 
+    @property
+    def sizing(self) -> tuple[int]:
+        return (self.n_buckets,)
+
     def to_bytes(self) -> bytes:
         if self.stash_fp:
             raise ValueError(
@@ -209,133 +226,20 @@ class Cuckoo:
         return cls(n_buckets)
 
 
-class ShardedCuckoo:
-    """B sub-filters keyed ``pmod(url_hash, B)`` — identical sharding
-    contract to ``ShardedBloom`` (docs/SCALE.md): no monolithic table,
-    each shard independently broadcastable and fold-able. At the
-    10^10-key design point a 256-shard filter holds ~93 MB/shard
-    (2 bytes/slot · slots/0.84) — same broadcast envelope as the Bloom
-    shards, with 80× tighter FPR and deletion."""
+class ShardedCuckoo(ShardedFilter):
+    """Sharded cuckoo (routing, build, fold and prefilter shared with
+    ``ShardedBloom``, docs/SCALE.md). At the 10^10-key design point a
+    256-shard filter holds ~93 MB/shard (2 bytes/slot · slots/0.84) —
+    same broadcast envelope as the Bloom shards, with 80× tighter FPR and
+    deletion."""
 
-    def __init__(self, n_shards: int, shards: list[Cuckoo]):
-        assert len(shards) == n_shards
-        self.n_shards = n_shards
-        self.shards = shards
-
-    @classmethod
-    def sized_for(cls, n_keys: int, fpr: float = 0.01,
-                  n_shards: int = 16) -> "ShardedCuckoo":
-        per = max(n_keys // n_shards, 64)
-        return cls(n_shards, [Cuckoo.sized_for(per, fpr)
-                              for _ in range(n_shards)])
-
-    def shard_of(self, keys: np.ndarray) -> np.ndarray:
-        return keys.astype(np.int64) % np.int64(self.n_shards)
-
-    def _by_shard(self, keys: np.ndarray):
-        keys = keys.astype(np.int64)
-        s = self.shard_of(keys)
-        for b in np.unique(s):
-            yield int(b), s == b, keys
-
-    def add_many(self, keys: np.ndarray) -> None:
-        if len(keys) == 0:
-            return
-        for b, mask, kv in self._by_shard(keys):
-            self.shards[b].add_many(kv[mask])
-
-    def may_contain_many(self, keys: np.ndarray) -> np.ndarray:
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        out = np.zeros(len(keys), dtype=bool)
-        for b, mask, kv in self._by_shard(keys):
-            out[mask] = self.shards[b].may_contain_many(kv[mask])
-        return out
+    shard_cls = Cuckoo
 
     def delete_many(self, keys: np.ndarray) -> np.ndarray:
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        out = np.zeros(len(keys), dtype=bool)
-        for b, mask, kv in self._by_shard(keys):
-            out[mask] = self.shards[b].delete_many(kv[mask])
-        return out
-
-    def merge(self, other: "ShardedCuckoo") -> "ShardedCuckoo":
-        assert self.n_shards == other.n_shards
-        for mine, theirs in zip(self.shards, other.shards):
-            mine.merge(theirs)
-        return self
+        return self._gather(keys, lambda shard, k: shard.delete_many(k))
 
 
-_CUCKOO_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("shard", T.IntegerType(), False),
-        T.StructField("partition_table", T.BinaryType(), False),
-        T.StructField("n_keys", T.LongType(), False),
-    ]
-)
-
-
-def _shard_table_rows(df: DataFrame, key_col: str,
-                      template: ShardedCuckoo) -> list:
-    """Distributed map phase (mirror of bloom._shard_bitmap_rows): each
-    partition builds per-shard tables with mapInPandas and ships only
-    the touched shards — driver transfer bounded by Σ touched-shard
-    table bytes, never O(|keys|)."""
-    n_shards = template.n_shards
-    sizing = [s.n_buckets for s in template.shards]
-
-    def per_partition(iterator):
-        local = ShardedCuckoo(n_shards, [Cuckoo(n) for n in sizing])
-        counts = np.zeros(n_shards, dtype=np.int64)
-        touched = False
-        for pdf in iterator:
-            keys = pdf[key_col].values.astype(np.int64)
-            if len(keys):
-                touched = True
-                local.add_many(keys)
-                np.add.at(counts, local.shard_of(keys), 1)
-        if touched:
-            yield pd.DataFrame(
-                [
-                    {
-                        "shard": b,
-                        "partition_table": local.shards[b].to_bytes(),
-                        "n_keys": int(counts[b]),
-                    }
-                    for b in range(n_shards)
-                    if counts[b] > 0
-                ]
-            )
-
-    return df.select(key_col).mapInPandas(
-        per_partition, _CUCKOO_ROW_SCHEMA).collect()
-
-
-def _merge_shard_rows(filt: ShardedCuckoo, rows: list) -> ShardedCuckoo:
-    sizing = [s.n_buckets for s in filt.shards]
-    for row in rows:
-        b = row["shard"]
-        filt.shards[b].merge(
-            Cuckoo.from_bytes(row["partition_table"], sizing[b]))
-    return filt
-
-
-def build_cuckoo(df: DataFrame, key_col: str,
-                 template: ShardedCuckoo) -> ShardedCuckoo:
-    """Distributed (re)build from scratch (resume path)."""
-    merged = ShardedCuckoo(
-        template.n_shards, [Cuckoo(s.n_buckets) for s in template.shards])
-    return _merge_shard_rows(merged, _shard_table_rows(df, key_col, template))
-
-
-def add_keys_distributed(filt: ShardedCuckoo, df: DataFrame,
-                         key_col: str) -> ShardedCuckoo:
-    """Incremental epoch fold: executors hash the epoch's resolved keys
-    into per-shard tables; the driver merges only touched shards (by
-    fingerprint re-insert — membership-equivalent to adding the same
-    keys locally, verified by test_cuckoo.py)."""
-    return _merge_shard_rows(filt, _shard_table_rows(df, key_col, filt))
+build_cuckoo = build
 
 
 _CUCKOO_KEYCELL_SCHEMA = T.StructType(
@@ -373,11 +277,8 @@ def delete_keys_distributed(
         bufs: dict[int, list[np.ndarray]] = {}
         for pdf in iterator:
             kv = pdf[key_col].values.astype(np.int64)
-            if not len(kv):
-                continue
-            s = kv % np.int64(n_shards)
-            for b in np.unique(s):
-                bufs.setdefault(int(b), []).append(kv[s == b])
+            for b, mask in _by_shard(kv, n_shards):
+                bufs.setdefault(b, []).append(kv[mask])
         if bufs:
             yield pd.DataFrame(
                 [
@@ -397,30 +298,3 @@ def delete_keys_distributed(
         found += int(filt.shards[row["shard"]].delete_many(kv).sum())
         total += len(kv)
     return found, total
-
-
-def prefilter_maybe_seen(df: DataFrame, key_col: str, filt: ShardedCuckoo,
-                         spark) -> tuple[DataFrame, DataFrame]:
-    """Split df into (definitely_new, maybe_seen); same contract and
-    per-shard-broadcast shape as bloom.prefilter_maybe_seen."""
-    sc = spark.sparkContext
-    sizing = [s.n_buckets for s in filt.shards]
-    bcs = [sc.broadcast(s.to_bytes()) for s in filt.shards]
-    n_shards = filt.n_shards
-
-    @F.pandas_udf(T.BooleanType())
-    def maybe_seen(keys: pd.Series) -> pd.Series:
-        kv = keys.values.astype(np.int64)
-        s = kv % np.int64(n_shards)
-        out = np.zeros(len(kv), dtype=bool)
-        for b in np.unique(s):
-            shard = Cuckoo.from_bytes(bcs[int(b)].value, sizing[int(b)])
-            mask = s == b
-            out[mask] = shard.may_contain_many(kv[mask])
-        return pd.Series(out)
-
-    flagged = df.withColumn("_maybe_seen", maybe_seen(F.col(key_col)))
-    return (
-        flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen"),
-        flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
-    )

@@ -80,6 +80,7 @@ from whakoom_webscrapper_spark.operators import cuckoo as CK
 from whakoom_webscrapper_spark.operators import extract, politeness
 from whakoom_webscrapper_spark.operators.bloom import (
     ShardedBloom,
+    ShardedFilter,
     add_keys_distributed,
     build_bloom,
     prefilter_maybe_seen,
@@ -116,11 +117,11 @@ class CrawlConfig:
     host_buckets: int = 256
     token_carryover: bool = True  # U6: unspent tokens accrue (cap burst x budget)
     burst_factor: int = politeness.BURST_FACTOR
-    use_bloom: bool = True
-    # seen-set backend: "bloom" (default) or "cuckoo" (operators/cuckoo.py
-    # — deletion-capable, ~80x tighter FPR at ~2.4 bytes/key; the north
-    # rule names both). Same sharding/broadcast/fold architecture either
-    # way; use_bloom=False disables the approximate prefilter entirely.
+    # approximate seen-set prefilter: "bloom" (default), "cuckoo"
+    # (operators/cuckoo.py — deletion-capable, ~80x tighter FPR at ~2.4
+    # bytes/key; the north rule names both; one shared sharding/broadcast/
+    # fold layer either way) or "none" (every candidate faces the exact
+    # anti-join against seen)
     seen_filter: str = "bloom"
     bloom_fpr: float = 0.01
     bloom_capacity: int = 1_000_000
@@ -276,7 +277,7 @@ def invalidate_urls(
     spark: SparkSession,
     cfg: CrawlConfig,
     urls_df: DataFrame,
-    filt: ShardedBloom | CK.ShardedCuckoo | None = None,
+    filt: ShardedFilter | None = None,
     discovery_time: int = 0,
     max_live_delete: int = 5_000_000,
 ) -> dict:
@@ -354,7 +355,7 @@ def invalidate_urls(
             # exact anti-join vs the effective seen set keeps
             # correctness) and let resume rebuild distributed
             filter_mode = "ledger_only"
-    elif isinstance(filt, ShardedBloom):
+    elif filt is not None:
         filter_mode = "rebuild_required"
 
     ledger = rows.select(
@@ -375,15 +376,6 @@ def invalidate_urls(
         upsert_parquet(spark, fpath, add, keys=["url_hash"])
     shutil.rmtree(tmp_rows, ignore_errors=True)
     return {"invalidated": n, "revoked_epoch": last, "filter": filter_mode}
-
-
-def _seen_filter_ops(filt):
-    """(prefilter, distributed-fold) pair for the active seen-set
-    backend — Bloom and cuckoo expose the same contract, dispatched on
-    the filter object so run_epoch stays backend-agnostic."""
-    if isinstance(filt, CK.ShardedCuckoo):
-        return CK.prefilter_maybe_seen, CK.add_keys_distributed
-    return prefilter_maybe_seen, add_keys_distributed
 
 
 def compact_invalidations(spark: SparkSession, cfg: CrawlConfig) -> int:
@@ -417,6 +409,19 @@ def compact_invalidations(spark: SparkSession, cfg: CrawlConfig) -> int:
     return len(old)
 
 
+def _observed_n(obs: Observation, df: DataFrame) -> int:
+    """The ``n`` row count ``obs`` collected on the persisted ``df``.
+
+    Spark completes an Observation with the first query whose plan holds
+    it even if that query skipped the observed node (AQE drops the side
+    of an anti-join whose other side is empty — an epoch whose pages all
+    fail their last attempt). The observation then holds an empty row
+    that ``Observation.get`` cannot convert; only then is ``df`` counted,
+    from its cache."""
+    row = obs._jo.getRow()
+    return int(row.getLong(0)) if row.length() else df.count()
+
+
 def run_epoch(
     spark: SparkSession,
     cfg: CrawlConfig,
@@ -424,7 +429,7 @@ def run_epoch(
     linkgraph: DataFrame,
     images: DataFrame,
     robots: DataFrame,
-    bloom: ShardedBloom | None,
+    filt: ShardedFilter | None,
 ) -> dict:
     t0 = time.perf_counter()
     phases: dict[str, float] = {}
@@ -643,16 +648,16 @@ def run_epoch(
     nxt = nxt_deduped
     n_before_seen_filter = nxt.count() if cfg.collect_stats else -1
 
-    # Bloom prefilter (J1) then exact anti-join (J6) against seen ∪ resolved
+    # seen-filter prefilter (J1) then exact anti-join (J6) against
+    # seen ∪ resolved
     seen_all = (
         resolved.select("url_hash")
         if seen_prev is None
         else seen_prev.select("url_hash").unionByName(resolved.select("url_hash"))
     )
-    if bloom is not None:
-        _prefilter, _ = _seen_filter_ops(bloom)
-        definitely_new, maybe_seen = _prefilter(nxt, "url_hash", bloom, spark)
-        # resolved-this-epoch keys are not in the bloom yet → always anti-join
+    if filt is not None:
+        definitely_new, maybe_seen = prefilter_maybe_seen(nxt, "url_hash", filt, spark)
+        # resolved-this-epoch keys are not in the filter yet → always anti-join
         survivors = maybe_seen.join(seen_all, "url_hash", "left_anti")
         nxt = definitely_new.join(
             resolved.select("url_hash"), "url_hash", "left_anti"
@@ -661,8 +666,8 @@ def run_epoch(
         nxt = nxt.join(seen_all, "url_hash", "left_anti")
 
     # materialize the filtered frontier ONCE: repartitionByRange's range
-    # sampling would otherwise recompute the bloom-UDF + anti-join chain a
-    # second time (measured ~2x the write phase)
+    # sampling would otherwise recompute the seen-filter UDF + anti-join
+    # chain a second time (measured ~2x the write phase)
     nxt = nxt.persist()
     n_next = nxt.count()
 
@@ -673,7 +678,7 @@ def run_epoch(
     mark("frontier_build")
 
     # ---- durable writes, commit marker last ----
-    # The four writes + bloom fold are independent (all read persisted
+    # The four writes + seen-filter fold are independent (all read persisted
     # DataFrames) — submit them from separate driver threads so their
     # fixed job-scheduling costs overlap instead of serializing (Spark's
     # scheduler is thread-safe; this halves per-epoch driver overhead).
@@ -724,12 +729,11 @@ def run_epoch(
             _p(cfg, "lineage", f"epoch={epoch}")
         ),
     ]
-    if bloom is not None:
+    if filt is not None:
         # distributed fold: executors hash the resolved keys into per-shard
-        # bitmaps (reads the persisted `resolved`, so it overlaps the seen
+        # filters (reads the persisted `resolved`, so it overlaps the seen
         # write); driver transfer is bounded by filter size, not key count
-        _, _fold = _seen_filter_ops(bloom)
-        tasks.append(lambda: _fold(bloom, resolved, "url_hash"))
+        tasks.append(lambda: add_keys_distributed(filt, resolved, "url_hash"))
     with ThreadPoolExecutor(max_workers=len(tasks)) as ex:
         futures = [ex.submit(t) for t in tasks]
         for f in futures:
@@ -740,9 +744,11 @@ def run_epoch(
     # three executed inside the write jobs above, so these are lookups
     stats = {
         "epoch": epoch,
-        "admitted": int(obs_admitted.get["n"]) if n_admitted < 0 else n_admitted,
-        "fetched": int(obs_pages.get["n"]),
-        "resolved": int(obs_resolved.get["n"]),
+        "admitted": (
+            _observed_n(obs_admitted, admitted) if n_admitted < 0 else n_admitted
+        ),
+        "fetched": _observed_n(obs_pages, pages),
+        "resolved": _observed_n(obs_resolved, resolved),
         "frontier_next": n_next,
         "duration_s": round(time.perf_counter() - t0, 3),
         "phases": phases,
@@ -852,16 +858,14 @@ def crawl(
         seeds = spark.read.parquet(os.path.join(cfg.world_dir, "seeds"))
         init_state(spark, cfg, seeds, rb)
 
-    bloom = None
-    if cfg.use_bloom:
+    filt = None
+    if cfg.seen_filter != "none":
         cls = {"bloom": ShardedBloom, "cuckoo": CK.ShardedCuckoo}[cfg.seen_filter]
-        bloom = cls.sized_for(
-            cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_shards
-        )
+        filt = cls.sized_for(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_shards)
         seen = read_seen(spark, cfg)
         if resume and seen is not None:
-            rebuild = build_bloom if cfg.seen_filter == "bloom" else CK.build_cuckoo
-            bloom = rebuild(seen, "url_hash", bloom)
+            # build_bloom is the one distributed build, for either backend
+            filt = build_bloom(seen, "url_hash", filt)
 
     epoch = start_epoch
     # first-epoch existence check; afterwards each epoch's stats carry the
@@ -869,7 +873,7 @@ def crawl(
     fr = _read_or_none(spark, _p(cfg, "frontier", f"epoch={epoch}"))
     nonempty = fr is not None and fr.limit(1).count() > 0
     while epoch < cfg.max_epochs and nonempty:
-        stats = run_epoch(spark, cfg, epoch, lg, im, rb, bloom)
+        stats = run_epoch(spark, cfg, epoch, lg, im, rb, filt)
         cfg.stats.append(stats)
         nonempty = stats["frontier_next"] > 0
         epoch += 1

@@ -19,6 +19,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+def _default_driver_memory() -> str:
+    """A quarter of the host's RAM, at least 1g and at most 16g. Local
+    mode runs every executor thread inside the driver JVM; a fixed 16g
+    heap on a 16 GB host lets the JVM grow until the kernel OOM-kills
+    it. ``SPARK_GRAFT_DRIVER_MEM`` overrides this."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(16, ram_gb // 4))}g"
+
+
 # On a 1000-executor cluster these would be per-job spark-submit confs; the
 # values here are the local[*] sandbox equivalents of the same ratios.
 DEFAULT_CONFS: dict[str, str] = {
@@ -34,12 +43,14 @@ DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",
     # Local mode runs every executor thread inside the driver JVM, so
-    # this heap backs all 32 cores' execution + shuffle + broadcast
-    # memory at once. 8g showed 2-3x rep-to-rep GC variance on the
-    # shingle/span queries at sf1.0 (round 6); 16g removes it while
-    # using ~1/8 of the sandbox's RAM. On a real cluster this value is
+    # this heap backs all cores' execution + shuffle + broadcast memory
+    # at once. 8g showed 2-3x rep-to-rep GC variance on the shingle/span
+    # queries at sf1.0 (round 6); 16g, 1/8 of that host's RAM, removed it
+    # and is the RAM/4 default's cap. On a real cluster this value is
     # per-spark-submit and the executors carry their own heaps.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()
+    ),
     "spark.ui.enabled": "false",
     "spark.sql.parquet.compression.codec": "snappy",
     # Hadoop vectored IO (default-on in Spark 4) funnels every parquet
